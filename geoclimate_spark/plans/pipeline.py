@@ -16,7 +16,10 @@ noted inline:
   parquet dir per stage            -> ``df.writeTo(tbl).createOrReplace()``
                                        (snapshot commit)
   manifest.jsonl row per stage     -> Iceberg snapshot summary / metadata tbl
-  per-file rows+bytes (lineage)    -> Iceberg manifest-file entries
+  per-file rows+bytes (lineage)    -> Iceberg manifest-file entries: the
+                                       writer-produced ``DataFile`` stats,
+                                       here each written file's parquet
+                                       footer row count and size
   _SUCCESS + manifest "ok" check   -> snapshot validity (atomic commit)
   resume = read stage parquet      -> time-travel read of last good snapshot
 
@@ -34,6 +37,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -86,17 +90,19 @@ def quarantined_apply(df: DataFrame, keys: list[str],
     return df.groupBy(*keys).applyInPandas(run, full_schema)
 
 
-def _file_lineage(df_read: DataFrame) -> list[dict]:
-    """Per-file row counts of a written snapshot — the manifest-entry
-    analogue. One tiny aggregation over the checkpoint, not the input."""
-    rows = (df_read.groupBy(F.input_file_name().alias("file"))
-            .count().collect())
+def _file_lineage(sdir: Path) -> list[dict]:
+    """Per-file rows and bytes of a snapshot the writer just produced — the
+    manifest-entry analogue. Read from the parquet footers, so it costs no
+    Spark job; files holding no rows are left out, as a rescan of the
+    snapshot never sees them."""
     out = []
-    for r in rows:
-        p = Path(r["file"].replace("file://", ""))
-        out.append({"file": p.name, "rows": r["count"],
-                    "bytes": p.stat().st_size if p.exists() else None})
-    return sorted(out, key=lambda d: d["file"])
+    for p in sorted(sdir.glob("*.parquet")):
+        if p.name.startswith(("_", ".")):
+            continue
+        rows = pq.read_metadata(p).num_rows
+        if rows:
+            out.append({"file": p.name, "rows": rows, "bytes": p.stat().st_size})
+    return out
 
 
 class PipelineRunner:
@@ -154,8 +160,7 @@ class PipelineRunner:
                 edir = self._stage_dir(f"{st.name}__errors")
                 errs = df.where(F.col("_err").isNotNull())
                 errs.write.mode("overwrite").parquet(str(edir))
-                esnap = self.spark.read.parquet(str(edir))
-                n_quarantined = esnap.count()
+                n_quarantined = sum(e["rows"] for e in _file_lineage(edir))
                 if n_quarantined:
                     self._append_manifest({
                         "stage": f"{st.name}__errors", "status": "ok",
@@ -163,12 +168,13 @@ class PipelineRunner:
                 df = df.where(F.col("_err").isNull()).drop("_err")
             # Iceberg: df.writeTo(...).createOrReplace() — atomic snapshot
             df.write.mode("overwrite").parquet(str(sdir))
-            snap = self.spark.read.parquet(str(sdir))
-            lineage = _file_lineage(snap)
+            # the stage's own schema: no inference pass over the footers
+            snap = self.spark.read.schema(df.schema).parquet(str(sdir))
+            lineage = _file_lineage(sdir)
             rec = {
                 "stage": st.name, "status": "ok",
                 "rows": sum(e["rows"] for e in lineage),
-                "bytes": sum(e["bytes"] or 0 for e in lineage),
+                "bytes": sum(e["bytes"] for e in lineage),
                 "n_files": len(lineage),
                 "wall_s": round(time.perf_counter() - t0, 3),
                 "ts": time.time(),

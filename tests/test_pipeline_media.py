@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -53,6 +54,59 @@ def test_pipeline_no_success_means_recompute(spark, tmp_path):
     _, _, calls = _run_counts(spark, tmp_path)
     assert ("pip_join", "computed") in calls
     assert ("extract", "resumed") in calls
+
+
+def _rescan_lineage(spark, sdir: Path) -> list[dict]:
+    """Oracle for the manifest's footer lineage: the Spark rescan it
+    replaced, per-file row counts of the snapshot by input file."""
+    rows = (spark.read.parquet(str(sdir))
+            .groupBy(F.input_file_name().alias("file")).count().collect())
+    out = []
+    for r in rows:
+        p = Path(r["file"].replace("file://", ""))
+        out.append({"file": p.name, "rows": r["count"],
+                    "bytes": p.stat().st_size})
+    return sorted(out, key=lambda d: d["file"])
+
+
+def test_manifest_lineage_equals_spark_rescan(spark, tmp_path):
+    stages = P.flagship_stages(SF) + [
+        P.Stage("spread", lambda s, up: up["pip_join"].repartition(3)),
+        P.Stage("empty", lambda s, up: up["pip_join"].where(F.lit(False))),
+    ]
+    runner = P.PipelineRunner(spark, tmp_path, stages)
+    runner.run(resume=False)
+    recs = {r["stage"]: r for r in runner.metrics()}
+    assert recs["spread"]["n_files"] == 3
+    assert recs["empty"]["n_files"] == 0 and recs["empty"]["rows"] == 0
+    for name, rec in recs.items():
+        want = _rescan_lineage(spark, tmp_path / name)
+        assert P._file_lineage(tmp_path / name) == want, name
+        assert rec["partitions"] == want, name
+        assert rec["rows"] == sum(e["rows"] for e in want), name
+        assert rec["bytes"] == sum(e["bytes"] for e in want), name
+        assert rec["n_files"] == len(want), name
+
+
+def _last_execution_id(spark) -> int:
+    """Id of the newest SQL execution in the session's status store, once
+    every event so far has reached it. Ids only grow, so the count of new
+    executions survives the store dropping old ones past its retention."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+
+def test_pipeline_run_issues_one_execution_per_stage(spark, tmp_path):
+    """Each computed stage costs its snapshot write and nothing else: the
+    lineage comes from the written footers, the read-back infers no schema,
+    and the zone dim is already in the JVM."""
+    stages = P.flagship_stages(SF)
+    P.PipelineRunner(spark, tmp_path / "warm", stages).run(resume=False)
+    before = _last_execution_id(spark)
+    P.PipelineRunner(spark, tmp_path / "run", stages).run(resume=False)
+    assert _last_execution_id(spark) - before == len(stages)
 
 
 def test_media_roundtrip_vs_oracle(spark, duck):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -39,6 +41,37 @@ def test_flagship_scan_prunes_columns(spark):
         assert "ReadSchema" in s
         assert "source" not in s.split("ReadSchema")[1]
         assert "n_chars" not in s.split("ReadSchema")[1]
+
+
+def test_rect_dim_reused_and_materialized(spark):
+    """The rect path's per-cell covering dim crosses Python→JVM once per
+    session and zone set: a repeat join builds nothing (no Spark job at plan
+    construction), reuses the same dim, and that dim is checkpointed JVM
+    rows — no Python-RDD conversion left for each broadcast to re-run."""
+    from geoclimate_spark.operators import spatial_join as SJ
+    from geoclimate_spark.sources.layers import climate_zones
+    zones = climate_zones()
+    pts = spark.createDataFrame([(1, 2_350_000, 48_850_000)],
+                                "page_id long, lon_e6 long, lat_e6 long")
+    plans = [_plan(SJ.spatial_join_points(pts, zones))]
+    sc = spark.sparkContext
+    sc.setJobGroup("rect-dim-reuse", "a repeat rect join must build nothing")
+    try:
+        plans.append(_plan(SJ.spatial_join_points(pts, zones)))
+        assert sc.statusTracker().getJobIdsForGroup("rect-dim-reuse") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for plan in plans:
+        assert "BroadcastHashJoin" in plan
+        assert "ArrowEvalPython" not in plan
+    cells = {m for p in plans for m in re.findall(r"z_cell#\d+L", p)}
+    assert len(cells) == 1, cells
+    (dim,) = [d for d in SJ._DIM_CACHE.values()
+              if cells <= set(re.findall(r"z_cell#\d+L",
+                                         d._jdf.queryExecution().toString()))]
+    lineage = dim._jdf.queryExecution().toRdd().toDebugString()
+    assert "LocalCheckpointRDD" in lineage or "CachedPartitions" in lineage
+    assert "PythonRDD" not in lineage and "applySchemaToPythonRDD" not in lineage
 
 
 def test_knn_plan_no_cartesian(spark):
